@@ -11,14 +11,13 @@ row counts, concentrated in ONE reduce partition.
 The question this probe answers (mirroring scale_probe_skew.py's
 salted-join-vs-AQE measurement): does AQE's skew-join mitigation help
 the production pit_join plan on a hot key, or is the engine's own
-``time_bucketed`` variant required? The hypothesis, from reading
-Spark's AQE rules: NO — ``OptimizeSkewedJoin`` detects skew by
-*partition bytes* (``skewedPartitionThresholdInBytes``, default
-256 MiB), and a hot key whose pair ENUMERATION is quadratic can sit in
-a partition of only a few MiB. Byte-based detection is blind to join-
-amplification skew; only restructuring the join key space
-(``time_bucketed`` adds ``floor(ts/ttl)`` to the equi key) bounds the
-enumeration.
+union-window strategy required? The hypothesis, from reading Spark's
+AQE rules: NO — ``OptimizeSkewedJoin`` detects skew by *partition
+bytes* (``skewedPartitionThresholdInBytes``, default 256 MiB), and a
+hot key whose pair ENUMERATION is quadratic can sit in a partition of
+only a few MiB. Byte-based detection is blind to join-amplification
+skew; only a plan that never enumerates the pairs (union-window's one
+sorted stream per key) bounds the work.
 
 Setup: 10M events / 2M spine rows, 1% of BOTH sides on one hot key
 (the rest uniform over 100k keys), 90 days of history, ttl = 7 days,
@@ -33,8 +32,7 @@ Variants (row-count-checked equal where inputs match):
   skewed, AQE defaults    — production plan, skew-join ON (256 MiB bar)
   skewed, AQE aggressive  — threshold 4 MiB / factor 2 (best case)
   skewed, AQE skew OFF    — the unmitigated worst case
-  skewed, time_bucketed   — the TTL-keyed mitigation
-  skewed, union_window    — the linear-per-key strategy (no TTL needed)
+  skewed, union_window    — the linear-per-key strategy
 
 Usage: python scripts/scale_probe_pit_skew.py
 
@@ -101,9 +99,7 @@ def make_sides(skewed: bool):
     )
 
 
-def run(
-    ev, sp, *, time_bucketed: bool = False, union_window: bool = False
-) -> tuple[float, int]:
+def run(ev, sp, *, union_window: bool = False) -> tuple[float, int]:
     kw = dict(
         join_keys=["user_id"],
         entity_ts_col="event_timestamp",
@@ -115,7 +111,7 @@ def run(
     if union_window:
         out = point_in_time_join_union_window(sp, ev, **kw)
     else:
-        out = point_in_time_join(sp, ev, time_bucketed=time_bucketed, **kw)
+        out = point_in_time_join(sp, ev, **kw)
     n = out.count()  # warm + row-count equivalence evidence
     best = float("inf")
     for _ in range(2):
@@ -158,7 +154,6 @@ if not auto_only:
     report("skewed skewfix-off", ev_s, sp_s)
     spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
 
-    report("skewed time-bucketed", ev_s, sp_s, time_bucketed=True)
     report("skewed union-window", ev_s, sp_s, union_window=True)
     report("uniform union-window", ev_u, sp_u, union_window=True)
 
@@ -166,8 +161,8 @@ if not auto_only:
 # materialize_features must pick the mitigation ITSELF: the registry-
 # time depth probe sees the deep per-key history (hot key ~1000 rows
 # within the 100k-row prefix, >> the 128 crossover) and selects
-# time_bucketed (TTL present) / union_window (no TTL) without the
-# caller knowing about the cliff. Wall time should match the pinned
+# union_window, with or without a TTL, without the caller knowing
+# about the cliff. Wall time should match the pinned
 # strategy above, not the pair join's 30x blowup.
 from tfx_addons_feast_examplegen_spark.operators.pit_join import (  # noqa: E402
     last_strategy_choices,
@@ -178,8 +173,7 @@ from tfx_addons_feast_examplegen_spark.registry import (  # noqa: E402
     Registry,
 )
 
-if auto_only:  # pinned references so the auto numbers are interpretable
-    report("skewed time-bucketed", ev_s, sp_s, time_bucketed=True)
+if auto_only:  # pinned reference so the auto numbers are interpretable
     report("skewed union-window", ev_s, sp_s, union_window=True)
 
 sp_s.createOrReplaceTempView("skewed_spine")

@@ -208,42 +208,47 @@ def test_cache_entities_same_result(spark, sf_dir):
     assert sorted(plain, key=key) == sorted(cached, key=key)
 
 
-def test_time_bucketed_equivalence(spark, sf_dir):
-    # The bucketed interval join must produce byte-identical results to
-    # the naive range join (SURVEY.md §4.2 scale technique).
+def test_nanos_entity_spine_joins_like_micros(spark, sf_dir, tmp_path):
+    # pandas writes datetime64[ns] as parquet TIMESTAMP(NANOS), which the
+    # session reads as BIGINT nanos (nanosAsLong). materialize_features
+    # must coerce the spine's timestamp like it does the views' event time.
+    import pandas as pd
+
+    from tfx_addons_feast_examplegen_spark.operators.pit_join import (
+        materialize_features,
+    )
+    from tfx_addons_feast_examplegen_spark.registry import testdata_registry
     from tfx_addons_feast_examplegen_spark.session import register_tables
 
-    t = register_tables(spark, sf_dir)
-    spine = spark.sql("""
-        SELECT c_custkey AS user_id, event_timestamp
-        FROM customer CROSS JOIN (VALUES (TIMESTAMP '2024-01-08 00:00:00'),
-            (TIMESTAMP '2024-01-15 00:00:00'), (TIMESTAMP '2024-01-22 12:34:56'),
-            (TIMESTAMP '2024-01-29 00:00:00')) AS v(event_timestamp)
-    """)
+    register_tables(spark, sf_dir)
+    path = str(tmp_path / "spine_nanos.parquet")
+    pd.DataFrame(
+        {
+            "user_id": list(range(100)),
+            "event_timestamp": pd.to_datetime(["2024-01-20"] * 100),
+        }
+    ).to_parquet(path)
+    nanos = spark.read.parquet(path)
+    assert dict(nanos.dtypes)["event_timestamp"] == "bigint"
+
     kw = dict(
-        join_keys=["user_id"],
-        entity_ts_col="event_timestamp",
-        feature_ts_col="ts",
-        features=["value", "event_type"],
-        created_col="event_id",
-        ttl_seconds=7 * 24 * 3600,
+        features=["user_events:value"],
+        registry=testdata_registry(),
+        sf_dir=sf_dir,
     )
-    plain = point_in_time_join(spine, t["events"], **kw)
-    bucketed = point_in_time_join(spine, t["events"], time_bucketed=True, **kw)
-    key = lambda r: (r.user_id, r.event_timestamp)
-    a = sorted(((key(r), r.value, r.event_type) for r in plain.collect()))
-    b = sorted(((key(r), r.value, r.event_type) for r in bucketed.collect()))
-    assert a == b
-    assert len(a) == plain.count()
-
-
-def test_time_bucketed_requires_ttl(spark):
-    from tfx_addons_feast_examplegen_spark.registry import RegistryError
-
-    ent = _entities(spark, [(1, T(2024, 1, 10))])
-    feat = _features(spark, [(1, T(2024, 1, 5), 1, 1.0)])
-    with pytest.raises(RegistryError):
-        _join(ent, feat, time_bucketed=True)
+    got = materialize_features(spark, entity_query=nanos, **kw).collect()
+    want = materialize_features(
+        spark,
+        entity_query="""
+            SELECT c_custkey AS user_id,
+                   TIMESTAMP '2024-01-20 00:00:00' AS event_timestamp
+            FROM customer WHERE c_custkey < 100
+        """,
+        **kw,
+    ).collect()
+    key = lambda r: (r.user_id, r.event_timestamp, r.value)  # noqa: E731
+    assert sorted(map(key, got)) == sorted(map(key, want))
+    assert any(r.value is not None for r in got)
 
 
 def test_empty_feature_table(spark):

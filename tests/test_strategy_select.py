@@ -1,12 +1,12 @@
 """Automatic as-of join strategy selection (VERDICT r9 item 4).
 
-The three physical strategies (pair+max_by, time_bucketed, union_window)
-are oracle-equivalent; ``materialize_features`` must pick per the
-measured decision rule — pair for shallow history, time_bucketed for
-deep history bounded by a TTL, union_window for deep/unbounded history —
-with explicit registry pins honored and the probe cached off the query
-path. Each branch is asserted here on fixture tables, plus end-to-end
-equivalence across all three pinned strategies.
+The two physical strategies (pair+max_by, union_window) are
+oracle-equivalent; ``materialize_features`` must pick per the measured
+decision rule — pair for shallow history, union_window for deep history
+with or without a TTL — with explicit registry pins honored and the
+probe cached off the query path. Each branch is asserted here on
+fixture tables, plus end-to-end equivalence across both pinned
+strategies.
 """
 
 import pytest
@@ -91,16 +91,16 @@ def test_auto_deep_history_no_ttl_picks_union_window(spark, sf_dir, tmp_path):
     assert "unboundedpreceding" in plan.lower()
 
 
-def test_auto_deep_history_with_ttl_picks_time_bucketed(
+def test_auto_deep_history_with_ttl_picks_union_window(
     spark, sf_dir, tmp_path
 ):
     register_tables(spark, sf_dir)
     path = _deep_view_path(spark, tmp_path)
     reg = Registry(views={"deep": _view(path, ttl=7 * 86400)})
     df = _materialize(spark, reg, sf_dir)
-    assert last_strategy_choices() == {"deep": "time_bucketed"}
+    assert last_strategy_choices() == {"deep": "union_window"}
     plan = df._jdf.queryExecution().optimizedPlan().toString()
-    assert "__f_bucket" in plan or "floor" in plan.lower()
+    assert "unboundedpreceding" in plan.lower()
 
 
 def test_explicit_pin_overrides_auto(spark, sf_dir, tmp_path):
@@ -119,7 +119,7 @@ def test_all_strategies_equivalent_end_to_end(spark, sf_dir, tmp_path):
     register_tables(spark, sf_dir)
     path = _deep_view_path(spark, tmp_path)
     results = {}
-    for strat in ("pair", "time_bucketed", "union_window"):
+    for strat in ("pair", "union_window"):
         reg = Registry(
             views={"deep": _view(path, ttl=30 * 86400, strategy=strat)}
         )
@@ -127,7 +127,7 @@ def test_all_strategies_equivalent_end_to_end(spark, sf_dir, tmp_path):
         results[strat] = sorted(
             (r.user_id, r.event_timestamp, r.score) for r in rows
         )
-    assert results["pair"] == results["time_bucketed"] == results["union_window"]
+    assert results["pair"] == results["union_window"]
 
 
 def test_probe_is_cached_per_view(spark, sf_dir, tmp_path):
@@ -146,13 +146,11 @@ def test_probe_is_cached_per_view(spark, sf_dir, tmp_path):
 
 
 def test_invalid_strategy_rejected():
-    with pytest.raises(RegistryError, match="unknown join strategy"):
-        _view("x.parquet", strategy="sortmerge")
-
-
-def test_time_bucketed_pin_requires_ttl():
-    with pytest.raises(RegistryError, match="requires"):
-        _view("x.parquet", ttl=None, strategy="time_bucketed")
+    # "time_bucketed" was a strategy once; a config still pinning it must
+    # fail loudly rather than silently fall back.
+    for strategy in ("sortmerge", "time_bucketed"):
+        with pytest.raises(RegistryError, match="unknown join strategy"):
+            _view("x.parquet", ttl=7 * 86400, strategy=strategy)
 
 
 def test_strategy_round_trips_through_yaml(tmp_path):

@@ -40,10 +40,10 @@ Spark-first design decisions (scale rationale):
   reused by the following aggregate (Catalyst sees matching partitioning),
   so it costs one shuffle, not two.
 - **Equi-conjuncts drive the shuffle; the time predicate stays a post-join
-  filter** inside the sort-merge/shuffled-hash join. For very hot entities
-  at extreme scale, callers can pre-bucket time (``time_bucket`` option)
-  to turn the range predicate into an additional equi key — a standard
-  interval-join technique (see SURVEY.md §4.2).
+  filter** inside the sort-merge/shuffled-hash join. Deep or hot-key
+  history, where the candidate pairs grow quadratically per key, goes to
+  the union-window strategy instead
+  (:func:`point_in_time_join_union_window`, linear per key).
 - Small feature views broadcast automatically (AQE); no hints needed.
 """
 
@@ -74,6 +74,44 @@ def _normalize_ts(df: DataFrame, ts_col: str) -> DataFrame:
     return df
 
 
+def _distinct_spine(
+    entity_df: DataFrame,
+    spine_source: DataFrame | None,
+    join_keys: list[str],
+    entity_ts_col: str,
+) -> DataFrame:
+    """Distinct ``(__ek_*, __ent_ts)`` spine both strategies join against,
+    taken from ``spine_source`` when given (see :func:`point_in_time_join`).
+
+    The reference's synthesized row id is concat(keys, ts), so this is the
+    same grain. Helper names are unique across both join sides so every
+    later reference resolves by name (avoids self-join attribute
+    ambiguity — the spine derives from the entity frame).
+    """
+    base = spine_source if spine_source is not None else entity_df
+    return base.select(
+        *[F.col(k).alias(f"__ek_{k}") for k in join_keys],
+        F.col(entity_ts_col).alias("__ent_ts"),
+    ).distinct()
+
+
+def _join_back(
+    entity_df: DataFrame,
+    latest: DataFrame,
+    join_keys: list[str],
+    entity_ts_col: str,
+) -> DataFrame:
+    """LEFT join the per-(keys, ts) winners back onto the entity rows (J6)
+    and drop the spine's helper columns."""
+    join_cond = None
+    for k in join_keys:
+        c = entity_df[k] == F.col(f"__ek_{k}")
+        join_cond = c if join_cond is None else (join_cond & c)
+    join_cond = join_cond & (entity_df[entity_ts_col] == F.col("__ent_ts"))
+    helper_cols = [f"__ek_{k}" for k in join_keys] + ["__ent_ts"]
+    return entity_df.join(latest, join_cond, "left").drop(*helper_cols)
+
+
 def point_in_time_join(
     entity_df: DataFrame,
     feature_df: DataFrame,
@@ -85,7 +123,6 @@ def point_in_time_join(
     created_col: str | None = None,
     ttl_seconds: int | None = None,
     output_prefix: str = "",
-    time_bucketed: bool = False,
     spine_source: DataFrame | None = None,
 ) -> DataFrame:
     """As-of join one feature table onto an entity spine (J1-J4, J6).
@@ -95,27 +132,6 @@ def point_in_time_join(
     (and ``feature_ts >= entity_ts - ttl`` when a TTL bounds staleness),
     ties broken by newest ``created_col``. Entities with no candidate keep
     their row with NULL features (left-outer semantics).
-
-    ``time_bucketed=True`` (requires a TTL) adds ``floor(ts / ttl)`` as an
-    extra equi-join key: each feature row lands in one bucket, each entity
-    probes its own bucket and the previous one (covering the full
-    ``[ts-ttl, ts]`` interval), and the original range predicate still
-    filters inside the match. This is the 100 TB interval-join technique
-    (SURVEY.md §4.2): a hot entity key with years of history no longer
-    pairs every entity row with every historical feature row — candidates
-    are bounded by two TTL windows regardless of history depth. Cost: the
-    entity side duplicates 2× before the shuffle. Results are identical
-    to the unbucketed join (equivalence is test-enforced).
-
-    Measured (scripts/scale_experiment.py, local[32], ttl=7d, 10% of
-    events on one hot key): 10M events / 10k users / 36 snapshots —
-    plain 8.7s vs bucketed 5.1s (1.7×); 50M events / 100k users / 24
-    snapshots (5M-event hot key) — plain 75.4s vs bucketed 17.3s
-    (4.4×). The gap grows with history depth since plain candidates
-    scale with full per-key history while bucketed candidates are capped
-    at two TTL windows. With shallow history (≲100 events/key) the
-    bucket arithmetic and 2× probe overhead make the plain join
-    marginally faster — choose per table.
 
     ``spine_source`` (default ``entity_df``) is the frame the distinct
     (keys, ts) spine and candidate set are computed from. When chaining
@@ -132,23 +148,9 @@ def point_in_time_join(
     """
     if not features:
         raise RegistryError("point_in_time_join: empty feature list")
-    if time_bucketed and not ttl_seconds:
-        raise RegistryError("time_bucketed requires ttl_seconds")
 
-    # Distinct (keys, ts) spine: the reference's synthesized row id is
-    # concat(keys, ts), so this is the same grain. Helper names are unique
-    # across both join sides so every later reference resolves by name
-    # (avoids self-join attribute ambiguity — the spine derives from
-    # entity_df).
-    base = spine_source if spine_source is not None else entity_df
     ent_ts = F.col("__ent_ts")
-    spine = (
-        base.select(
-            *[F.col(k).alias(f"__ek_{k}") for k in join_keys],
-            F.col(entity_ts_col).alias("__ent_ts"),
-        )
-        .distinct()
-    )
+    spine = _distinct_spine(entity_df, spine_source, join_keys, entity_ts_col)
 
     feat_cols: list[Column] = [F.col(k).alias(f"__fk_{k}") for k in join_keys]
     feat_cols.append(F.col(feature_ts_col).alias("__f_ts"))
@@ -158,29 +160,10 @@ def point_in_time_join(
     feat_cols.extend(F.col(f).alias(f"__fv_{f}") for f in features)
     feat = feature_df.select(*feat_cols)
 
-    if time_bucketed:
-        # One bucket per feature row; entity probes bucket(ts) and
-        # bucket(ts)-1 (posexplode of the two offsets) so every feature
-        # in [ts-ttl, ts] shares a bucket with the probe.
-        bucket = lambda ts_col: F.floor(  # noqa: E731
-            F.unix_timestamp(ts_col) / F.lit(int(ttl_seconds))
-        ).cast("long")
-        feat = feat.withColumn("__f_bucket", bucket(F.col("__f_ts")))
-        spine = spine.select(
-            "*",
-            F.explode(
-                F.array(
-                    bucket(ent_ts), bucket(ent_ts) - F.lit(1)
-                )
-            ).alias("__e_bucket"),
-        )
-
     cond = None
     for k in join_keys:
         c = F.col(f"__ek_{k}") == F.col(f"__fk_{k}")
         cond = c if cond is None else (cond & c)
-    if time_bucketed:
-        cond = cond & (F.col("__e_bucket") == F.col("__f_bucket"))
     time_cond = F.col("__f_ts") <= ent_ts
     if ttl_seconds:
         # Interval lower bound: feature row valid only within
@@ -190,13 +173,9 @@ def point_in_time_join(
     cond = cond & time_cond
 
     candidates = spine.join(feat, cond, "inner")
-    if time_bucketed:
-        # A feature row can match the same (entity, ts) through both
-        # probed buckets only if buckets collide — impossible (one bucket
-        # per feature row), so no dedup needed; drop the helper column.
-        candidates = candidates.drop("__e_bucket", "__f_bucket")
 
-    # Latest-wins dedup via max_by hash-agg (no sort; see module docstring).
+    # Latest-wins dedup via max_by (Sort + SortAggregate with a struct
+    # payload; see module docstring).
     ordering = (
         F.struct(F.col("__f_ts"), F.col("__f_created"))
         if created_col
@@ -212,15 +191,7 @@ def point_in_time_join(
             *[F.col(f"__payload.{f}").alias(out_names[f]) for f in features],
         )
     )
-
-    join_cond = None
-    for k in join_keys:
-        c = entity_df[k] == F.col(f"__ek_{k}")
-        join_cond = c if join_cond is None else (join_cond & c)
-    join_cond = join_cond & (entity_df[entity_ts_col] == F.col("__ent_ts"))
-
-    helper_cols = [f"__ek_{k}" for k in join_keys] + ["__ent_ts"]
-    return entity_df.join(latest, join_cond, "left").drop(*helper_cols)
+    return _join_back(entity_df, latest, join_keys, entity_ts_col)
 
 
 def _static_join(
@@ -253,15 +224,16 @@ def _static_join(
 
 # ---- automatic as-of strategy selection (SURVEY.md §4.2) -------------
 #
-# Decision rule, from the measured crossovers (scripts/scale_experiment.py
-# and scripts/scale_probe_pit_skew.py; docs/BENCH_NOTES_r09.md):
+# Decision rule, from the measured crossovers
+# (scripts/scale_probe_pit_skew.py; docs/BENCH_NOTES_r09.md):
 #
-# - per-key history depth <~100: pair+max_by wins (bucket arithmetic and
-#   the 2x probe duplication cost more than they save);
-# - deep history WITH a TTL: time_bucketed (candidates capped at two TTL
-#   windows regardless of depth — 4.4x at 50M events / 5M-event hot key);
-# - deep or unbounded history WITHOUT a TTL: union_window (linear per-key
-#   cost; the 30x hot-key cliff AQE cannot see, restored to 1.0x).
+# - per-key history depth <~100: pair+max_by wins (the union-window
+#   shuffles and sorts every feature row, which costs more than the few
+#   candidate pairs it saves);
+# - deep history, with or without a TTL: union_window (linear per-key
+#   cost; the 30x hot-key cliff AQE cannot see, restored to 1.0x). A TTL
+#   does not change the choice: union-window applies it as a post-filter
+#   on the carried winner.
 #
 # The probe is a bounded, cached, feature-side stat: max per-key row count
 # within the first _AUTO_PROBE_ROWS rows, computed once per (view, path)
@@ -307,9 +279,7 @@ def _select_strategy(view, fdf: DataFrame, sf_dir: str) -> str:
     depth = _probe_max_key_depth(
         fdf, list(view.entities), (view.name, view.resolve_path(sf_dir))
     )
-    if depth > _AUTO_DEPTH_THRESHOLD:
-        return "time_bucketed" if view.ttl_seconds else "union_window"
-    return "pair"
+    return "union_window" if depth > _AUTO_DEPTH_THRESHOLD else "pair"
 
 
 def materialize_features(
@@ -344,9 +314,8 @@ def materialize_features(
     Each view's physical as-of strategy is resolved per its registry
     ``strategy`` field: ``auto`` (default) applies the measured decision
     rule above :func:`_select_strategy` using a cached bounded per-key
-    depth probe; explicit ``pair`` / ``time_bucketed`` /
-    ``union_window`` pin the shape (all three are oracle-equivalent —
-    only the plan differs). The per-view choice is recorded in
+    depth probe; explicit ``pair`` / ``union_window`` pin the shape (both
+    are oracle-equivalent — only the plan differs). The per-view choice is recorded in
     :func:`last_strategy_choices` so plan dumps show which shape ran.
     """
     resolved = registry.resolve_features(features)
@@ -361,6 +330,7 @@ def materialize_features(
         raise RegistryError(
             f"entity query result lacks timestamp column {entity_ts_col!r}"
         )
+    entity_df = _normalize_ts(entity_df, entity_ts_col)
 
     out = entity_df
     for view_name, feats in resolved.items():
@@ -395,12 +365,12 @@ def materialize_features(
                 output_prefix=prefix,
                 spine_source=entity_df if from_base else None,
             )
-            if strategy == "union_window":
-                out = point_in_time_join_union_window(out, fdf, **kw)
-            else:
-                out = point_in_time_join(
-                    out, fdf, time_bucketed=(strategy == "time_bucketed"), **kw
-                )
+            join = (
+                point_in_time_join_union_window
+                if strategy == "union_window"
+                else point_in_time_join
+            )
+            out = join(out, fdf, **kw)
         else:
             out = _static_join(
                 out,
@@ -436,9 +406,8 @@ def nearest_event_join(
     neighbors (covering the full ±tolerance interval), and the exact
     range predicate filters inside the match. A hot key pairs each
     entity row with at most three tolerance windows of history — the
-    same 100 TB interval-join shape as ``time_bucketed`` pit_join, made
-    non-optional because "nearest" without a bound is a full-history
-    scan per row.
+    standard interval-join shape (SURVEY.md §4.2), made non-optional
+    because "nearest" without a bound is a full-history scan per row.
 
     Ties (equal distance both sides) break backward-first, then newest
     ``created_col`` — deterministic and replayable in ANSI SQL.
@@ -525,25 +494,12 @@ def point_in_time_join_union_window(
     default's shuffle of map-side-combined candidate winners. With
     shallow per-key history the default moves less data; with deep or
     skewed history the union-window's linear per-key cost wins by
-    orders of magnitude. ``time_bucketed=True`` remains the choice
-    when a TTL allows hash-partitioning the history itself; this
-    strategy needs no TTL at all (the unbounded-history hot-key case
-    nothing else covers).
+    orders of magnitude, with or without a TTL.
     """
     if not features:
         raise RegistryError("point_in_time_join_union_window: empty feature list")
 
-    # Same flat-plan chaining hook as point_in_time_join: derive the
-    # distinct spine from the ORIGINAL entity frame when chaining views
-    # so the logical tree stays linear in view count.
-    base = spine_source if spine_source is not None else entity_df
-    spine = (
-        base.select(
-            *[F.col(k).alias(f"__ek_{k}") for k in join_keys],
-            F.col(entity_ts_col).alias("__ent_ts"),
-        )
-        .distinct()
-    )
+    spine = _distinct_spine(entity_df, spine_source, join_keys, entity_ts_col)
 
     ordering = (
         F.struct(F.col(feature_ts_col), F.col(created_col))
@@ -604,11 +560,4 @@ def point_in_time_join_union_window(
         F.col("__ts").alias("__ent_ts"),
         *[F.col(f"__carry.{f}").alias(out_names[f]) for f in features],
     )
-
-    join_cond = None
-    for k in join_keys:
-        c = entity_df[k] == F.col(f"__ek_{k}")
-        join_cond = c if join_cond is None else (join_cond & c)
-    join_cond = join_cond & (entity_df[entity_ts_col] == F.col("__ent_ts"))
-    helper_cols = [f"__ek_{k}" for k in join_keys] + ["__ent_ts"]
-    return entity_df.join(latest, join_cond, "left").drop(*helper_cols)
+    return _join_back(entity_df, latest, join_keys, entity_ts_col)

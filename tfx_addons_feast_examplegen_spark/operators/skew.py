@@ -115,7 +115,7 @@ def skew_report(
     over distinct keys). Run this BEFORE choosing a mitigation — a skew
     factor near 1 needs nothing, moderate factors are AQE's job
     (skew-join splitting), triple digits call for :func:`salted_agg` /
-    :func:`salted_join` or the time-bucketed as-of join.
+    :func:`salted_join` or the union-window as-of join.
 
     One map-side-combinable count aggregate + a 1-row global summary
     broadcast — the diagnostic costs one shuffle of (distinct keys)

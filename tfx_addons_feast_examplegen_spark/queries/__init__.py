@@ -168,7 +168,7 @@ _ENTRY_ORDER = [
     "similarity_ann_ivf_recall",
     "dedup_simhash",
     "pit_join_ttl",
-    "pit_join_time_bucketed",
+    "pit_join_union_window_ttl",
     "pit_join_union_window",
     "pit_join_multiview",
     "feature_service",
@@ -349,7 +349,7 @@ _DRIVER_PRIORITY = [
     "lateral_topk_per_key",
     "monthly_order_delta",
     "percentiles",
-    "pit_join_time_bucketed",
+    "pit_join_union_window_ttl",
     "q10_returned_items",
     "q18_large_orders",
     "q7_nation_volume",
@@ -369,14 +369,17 @@ _DRIVER_PRIORITY = [
     "feature_service",
     "fuzzy_editdist_pairs",
     "global_row_ids",
-    "html_text_extract",
-    "interval_overlap_join",
-    "param_substitution",
-    "pii_redaction",
     "pit_join_composite_key",
     "pit_join_field_mapping",
     "pit_join_multiview",
     "pit_join_prefixed",
+    # As-of strategy consolidation: the shared spine/join-back helpers
+    # and the docstrings that named the removed bucketed strategy moved
+    # these fingerprints (they displace the four newest-green fill rows).
+    "pit_join_ttl",
+    "pit_join_union_window",
+    "nearest_event_join",
+    "skew_report",
     # --- slot 50 boundary ---
 ]
 if set(_ENTRY_ORDER) != set(_REGISTRY):

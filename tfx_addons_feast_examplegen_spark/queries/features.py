@@ -93,38 +93,13 @@ def _q_pit_join_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _q_pit_join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # The 100 TB scale path (time_bucketed=True) against the SAME oracle
-    # as the plain TTL join — result equivalence is part of the contract.
-    from ..operators.pit_join import point_in_time_join
-
-    t = register_tables(spark, sf_dir)
-    spine = spark.sql(_SPINE_SQL)
-    out = point_in_time_join(
-        spine,
-        t["events"],
-        join_keys=["user_id"],
-        entity_ts_col="event_timestamp",
-        feature_ts_col="ts",
-        features=["value", "event_type"],
-        created_col="event_id",
-        ttl_seconds=7 * 24 * 3600,
-        time_bucketed=True,
-    )
-    return out.select(
-        F.col("user_id"),
-        F.unix_timestamp("event_timestamp").alias("snapshot_ts"),
-        F.col("value"),
-        F.col("event_type"),
-    )
-
-
-def _q_pit_union_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # The linear-per-key as-of strategy (hot-key path) against the SAME
-    # oracle as the flagship pair+max_by join — strategy equivalence is
-    # part of the contract. No TTL: this is the unbounded-history case
-    # neither time_bucketed (needs a TTL) nor AQE (byte-based skew
-    # detection) covers; see scripts/scale_probe_pit_skew.py.
+def _pit_union_window(
+    spark: SparkSession, sf_dir: str, ttl_seconds: int | None = None
+) -> DataFrame:
+    # The linear-per-key as-of strategy (hot-key / deep-history path)
+    # against the SAME oracle as the pair+max_by join of the same TTL —
+    # strategy equivalence is part of the contract; see
+    # scripts/scale_probe_pit_skew.py for why it exists.
     from ..operators.pit_join import point_in_time_join_union_window
 
     t = register_tables(spark, sf_dir)
@@ -137,6 +112,7 @@ def _q_pit_union_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         feature_ts_col="ts",
         features=["value", "event_type"],
         created_col="event_id",
+        ttl_seconds=ttl_seconds,
     )
     return out.select(
         F.col("user_id"),
@@ -144,6 +120,16 @@ def _q_pit_union_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("value"),
         F.col("event_type"),
     )
+
+
+def _q_pit_union_window(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _pit_union_window(spark, sf_dir)
+
+
+def _q_pit_union_window_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # TTL rides as a post-filter on the carried winner; the oracle is
+    # the pair join's candidate-side interval predicate.
+    return _pit_union_window(spark, sf_dir, ttl_seconds=7 * 24 * 3600)
 
 
 def _q_feature_service(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -531,7 +517,10 @@ ENTRIES: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]] 
     "feature_histogram": (_q_histogram, _HISTOGRAM_ORACLE),
     "pit_join_union_window": (_q_pit_union_window, _pit_oracle()),
     "pit_join_ttl": (_q_pit_join_ttl, _pit_oracle(ttl_days=7)),
-    "pit_join_time_bucketed": (_q_pit_join_bucketed, _pit_oracle(ttl_days=7)),
+    "pit_join_union_window_ttl": (
+        _q_pit_union_window_ttl,
+        _pit_oracle(ttl_days=7),
+    ),
     "pit_join_multiview": (_q_pit_multiview, _PIT_MULTIVIEW_ORACLE),
     "feature_service": (_q_feature_service, _pit_oracle()),
 }

@@ -130,7 +130,7 @@ GROUP BY s.s_nationkey
 def _q_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The diagnostics half of skew mitigation: hottest keys + integer
     # basis-point share + skew factor, so the mitigation choice (none /
-    # AQE / salting / time-bucketing) is measured, not guessed.
+    # AQE / salting / union-window) is measured, not guessed.
     from ..operators.skew import skew_report
 
     t = register_tables(spark, sf_dir)

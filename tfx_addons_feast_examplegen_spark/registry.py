@@ -60,23 +60,18 @@ class FeatureView:
     field_mapping: dict[str, str] = field(default_factory=dict)  # src -> feature
     format: str = "parquet"  # parquet | csv | json | orc
     # Physical as-of join strategy (SURVEY.md §4.2): "auto" (default)
-    # samples per-key history depth once per view at materialization
-    # time and picks pair / time_bucketed / union_window per the
+    # probes per-key history depth once per view at materialization
+    # time and picks pair (shallow) or union_window (deep) per the
     # measured decision rule in operators/pit_join.py; explicit values
     # pin the choice (e.g. a hot-SPINE workload needs "union_window" —
     # spine skew is per-query, so auto's feature-side probe can't see it).
-    strategy: str = "auto"  # auto | pair | time_bucketed | union_window
+    strategy: str = "auto"  # auto | pair | union_window
 
     def __post_init__(self) -> None:
-        if self.strategy not in ("auto", "pair", "time_bucketed", "union_window"):
+        if self.strategy not in ("auto", "pair", "union_window"):
             raise RegistryError(
                 f"view {self.name!r}: unknown join strategy {self.strategy!r} "
-                "(expected auto | pair | time_bucketed | union_window)"
-            )
-        if self.strategy == "time_bucketed" and not self.ttl_seconds:
-            raise RegistryError(
-                f"view {self.name!r}: strategy 'time_bucketed' requires "
-                "ttl_seconds (the bucket width IS the TTL)"
+                "(expected auto | pair | union_window)"
             )
 
     def read(self, spark, sf_dir: str):

@@ -468,10 +468,9 @@ def write_partitioned_tfrecords(
                 os.path.join(out_dir, "Split-*", f"{file_prefix}-*.tfrecord*")
             ):
                 os.remove(p)
+    # Split dirs are created by the tasks that write into them; a driver
+    # pre-pass over the split values would recompute the whole input.
     os.makedirs(out_dir, exist_ok=True)
-    if split_col is not None:
-        for r in bytes_df.select(split_col).distinct().collect():
-            os.makedirs(os.path.join(out_dir, f"Split-{r[0]}"), exist_ok=True)
 
     suffix = ".gz" if compress else ""
     opener = gzip.open if compress else open
