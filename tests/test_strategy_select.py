@@ -146,11 +146,17 @@ def test_probe_is_cached_per_view(spark, sf_dir, tmp_path):
 
 
 def test_invalid_strategy_rejected():
-    # "time_bucketed" was a strategy once; a config still pinning it must
-    # fail loudly rather than silently fall back.
-    for strategy in ("sortmerge", "time_bucketed"):
+    with pytest.raises(RegistryError, match="unknown join strategy"):
+        _view("x.parquet", strategy="sortmerge")
+
+
+def test_time_bucketed_pin_requires_ttl():
+    # "time_bucketed" was a strategy once and required a TTL; it is gone, so
+    # a config still pinning it must fail loudly, with or without a TTL,
+    # rather than silently fall back to another strategy.
+    for ttl in (None, 7 * 86400):
         with pytest.raises(RegistryError, match="unknown join strategy"):
-            _view("x.parquet", ttl=7 * 86400, strategy=strategy)
+            _view("x.parquet", ttl=ttl, strategy="time_bucketed")
 
 
 def test_strategy_round_trips_through_yaml(tmp_path):
